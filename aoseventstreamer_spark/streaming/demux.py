@@ -6,16 +6,19 @@ The demux job amortizes: a single ``readStream`` over the event log;
 each micro-batch is matched against ALL registered groups in ONE pass
 — every event enumerates its candidate query subjects (bounded-depth
 grammar ⇒ ≤ 4 keys, subjects.candidate_query_subjects) which
-equi-join, broadcast, against the group dimension. Each group then
-receives only its slice of the (persisted, already-matched) frame;
-groups with no matches this batch all receive ONE shared empty frame
-(``runner.empty_frame``, built once at start — no per-group plan
-work), so per-batch work is one join job plus one cheap job per
-*matching* group — flat in the number of registered groups. Chunk ids stay
-per-group (batch_id), the checkpoint is shared — commit happens only
-after ALL groups accepted the batch, preserving (coarsening) the
-at-least-once contract: a failed deliver for any group replays the
-batch for all.
+equi-join, broadcast, against the group dimension. The matched batch
+is collected to the driver ONCE as an Arrow table (the batch's one
+Spark action; broadcasting the group dimension is the only other job),
+sorted by group and cut into zero-copy per-group slices. Each matching
+group receives its slice as a driver-local ``LocalRelation``
+DataFrame, whose collect() runs no Spark job; idle groups all receive
+ONE shared empty frame (``runner.empty_frame``, built once per
+runner). Spark work per batch is therefore flat in the fleet size; the
+per-group cost is the py4j round trips that plan the group's frame,
+plus the callback's own work. Chunk ids stay per-group (batch_id), the
+checkpoint is shared — commit happens only after ALL groups accepted
+the batch, preserving (coarsening) the at-least-once contract: a
+failed deliver for any group replays the batch for all.
 
 That coarsening is the deliberate trade: one scan + one checkpoint vs
 per-group offsets. Groups that need isolated progress stay on
@@ -30,8 +33,11 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from aoseventstreamer_spark import schemas
 from aoseventstreamer_spark.functions import subjects as S
@@ -50,7 +56,6 @@ class DemuxRunner:
         spark: SparkSession,
         events_path: str,
         checkpoint: str,
-        slice_partitions: int | None = None,
         deliver_concurrency: int | None = None,
         log_format: str = "parquet",
     ):
@@ -78,47 +83,31 @@ class DemuxRunner:
         self.checkpoint = checkpoint
         self.log_format = log_format
         # Per-group deliveries within one batch run CONCURRENTLY from a
-        # bounded driver pool: each deliver's action is tiny (a pruned
-        # slice of the cached batch) but pays a serial py4j+scheduling
-        # floor (~75 ms measured at r6), which serialized a 1000-group
-        # fleet into ~75 s per batch — far over the 250 ms trigger.
-        # Spark's scheduler accepts concurrent job submission from
-        # driver threads, so N cheap actions overlap into ~floor/N
-        # marginal. Contract change: deliver callbacks must be
-        # thread-safe ACROSS GROUPS within a batch (a single group's
-        # deliveries stay ordered across batches — foreachBatch is
-        # serial); failure semantics are unchanged — every deliver is
-        # awaited and the first error re-raises after the pool drains,
-        # so a partial failure still fails the batch and replays it for
-        # all groups. Set deliver_concurrency=1 for strict in-order
-        # single-threaded delivery.
+        # bounded driver pool: a delivery runs no Spark job, but
+        # planning its LocalRelation and the callback's own action pay
+        # a serial py4j floor per group, which overlaps across driver
+        # threads. Contract: deliver callbacks must be thread-safe
+        # ACROSS GROUPS within a batch (a single group's deliveries stay
+        # ordered across batches — foreachBatch is serial); failure
+        # semantics are unchanged — every deliver is awaited and the
+        # first error re-raises after the pool drains, so a partial
+        # failure still fails the batch and replays it for all groups.
+        # Set deliver_concurrency=1 for strict in-order single-threaded
+        # delivery.
         self.deliver_concurrency = deliver_concurrency or min(
             16, os.cpu_count() or 4
-        )
-        # Partition count of the cached per-batch matched frame. Every
-        # DELIVERING group's slice action schedules one task per cached
-        # partition, so fleet delivery cost is
-        # O(matching_groups × slice_partitions) tasks per batch — while
-        # a single group's slice parallelism is bounded by the same
-        # number. The default biases toward fleet fan-out (the demux's
-        # reason to exist); a deployment with few groups and huge
-        # per-group slices should raise it.
-        self.slice_partitions = slice_partitions or max(
-            4, int(spark.sparkContext.defaultParallelism) // 8
         )
         self._groups: list[DemuxGroup] = []
         self._started = False
         # ONE empty frame shared by every idle group in every batch:
-        # zero per-group construction or planning cost. Built as a
-        # LocalRelation folded empty by Catalyst — NOT
-        # createDataFrame([], schema), whose RDD backing carries
-        # defaultParallelism empty partitions and turns every idle
-        # subscriber's count() into a 32-task job (measured 533 ms vs
-        # 65 ms per action, tools/demux_scale.py)
-        one_null_row = [tuple(None for _ in schemas.ROUTED_EVENTS_SCHEMA.fields)]
+        # zero per-group construction or planning cost. Built from an
+        # Arrow table like the matching groups' slices, so it is a
+        # LocalRelation too — NOT createDataFrame([], schema), whose RDD
+        # backing turns every idle subscriber's action into a job
         self.empty_frame = spark.createDataFrame(
-            one_null_row, schemas.ROUTED_EVENTS_SCHEMA
-        ).where(F.lit(False))
+            to_arrow_schema(schemas.ROUTED_EVENTS_SCHEMA).empty_table(),
+            schema=schemas.ROUTED_EVENTS_SCHEMA,
+        )
 
     def register(
         self, group_id: str, filter_subject: str, deliver: Callable[[int, DataFrame], None]
@@ -185,6 +174,14 @@ class DemuxRunner:
         max_files_per_trigger: int = 64,
         allow_missed_history: bool = False,
     ):
+        """Start the fleet's streaming query. Each micro-batch's matched
+        rows are held on the driver, as one Arrow table, for the length
+        of that trigger — one row per (event, group it matches). The
+        bound on that table is the batch: ``max_files_per_trigger``
+        files of the parquet log, or the commit range of one trigger for
+        ``log_format='tablelog'`` (which has no file cap); size the
+        driver, or lower ``max_files_per_trigger``, for large fleets
+        over wide batches."""
         groups = list(self._groups)
         if not groups:
             raise ValueError("no groups registered")
@@ -195,73 +192,65 @@ class DemuxRunner:
         # match join (group_key = the filter_subject verbatim — exact
         # filters equal the publish subject, subtree filters equal
         # `<ancestor base>.>`, which is exactly what
-        # candidate_query_subjects enumerates per event)
+        # candidate_query_subjects enumerates per event). Built from
+        # Arrow, so each batch's broadcast reads a JVM-side
+        # LocalRelation instead of running Python workers over pickles
         groups_dim = self.spark.createDataFrame(
-            [(g.id, g.filter_subject) for g in groups],
-            "__group_id string, __group_key string",
+            pa.table({
+                "__group_id": [g.id for g in groups],
+                "__group_key": [g.filter_subject for g in groups],
+            })
         )
         event_cols = [f.name for f in schemas.ROUTED_EVENTS_SCHEMA.fields]
 
         def fan_out(batch_df: DataFrame, batch_id: int) -> None:
-            from pyspark.sql import Observation
-
-            obs = Observation()
+            # the batch's one Spark action: match, collect to the driver
             matched = (
                 batch_df.withColumn("__key", F.explode(S.candidate_query_subjects()))
                 .join(F.broadcast(groups_dim), F.col("__key") == F.col("__group_key"))
                 .select("__group_id", *event_cols)
-                # co-locate AND sort each group's rows before caching:
-                # the per-group slice filter then prunes cached batches
-                # by their __group_id min/max stats (InMemoryTableScan
-                # partition pruning needs the sort for narrow ranges),
-                # and the bounded partition count caps the tasks each
-                # slice action schedules — together measured 0.8
-                # s/group -> ~0.05 s/group marginal at 1k-group fleets
-                # (tools/demux_scale.py)
-                .repartition(self.slice_partitions, "__group_id")
-                .sortWithinPartitions("__group_id")
-                # which groups have data rides the materialization job
-                # as an observation metric (map-side collect_set into
-                # ONE row, bounded by the registered-group count) — no
-                # per-batch collect() round trip, no distinct shuffle
-                .observe(obs, F.collect_set("__group_id").alias("present"))
+                .toArrow()
+                .sort_by("__group_id")
             )
-            matched.persist()
-            try:
-                # ONE job fills the cache and computes the metric
-                matched.count()
-                present = set(obs.get["present"])
+            # each group's rows are one contiguous run of the sorted
+            # table; value_counts lists the runs in order
+            runs = pc.value_counts(matched["__group_id"])
+            rows = matched.drop_columns(["__group_id"])
+            slices: dict[str, pa.Table] = {}
+            offset = 0
+            for gid, n in zip(
+                runs.field("values").to_pylist(), runs.field("counts").to_pylist()
+            ):
+                slices[gid] = rows.slice(offset, n)
+                offset += n
 
-                def deliver_one(g: DemuxGroup) -> None:
-                    if g.id in present:
-                        slice_df = matched.filter(
-                            F.col("__group_id") == g.id
-                        ).drop("__group_id")
-                    else:
-                        # shared empty frame: actions on it cost
-                        # ~nothing, so idle groups add no real work
-                        slice_df = self.empty_frame
-                    g.deliver(batch_id, slice_df)
-
-                if self.deliver_concurrency > 1 and len(groups) > 1:
-                    with ThreadPoolExecutor(
-                        max_workers=self.deliver_concurrency,
-                        thread_name_prefix="demux-deliver",
-                    ) as pool:
-                        futures = [pool.submit(deliver_one, g) for g in groups]
-                    # the with-block joined every future; surface the
-                    # FIRST failure (deterministic: registration order)
-                    # so a partial failure fails the whole batch and
-                    # the shared checkpoint replays it for all groups
-                    for fut in futures:
-                        err = fut.exception()
-                        if err is not None:
-                            raise err
+            def deliver_one(g: DemuxGroup) -> None:
+                part = slices.get(g.id)
+                if part is None:
+                    slice_df = self.empty_frame
                 else:
-                    for g in groups:
-                        deliver_one(g)
-            finally:
-                matched.unpersist()
+                    slice_df = self.spark.createDataFrame(
+                        part, schema=schemas.ROUTED_EVENTS_SCHEMA
+                    )
+                g.deliver(batch_id, slice_df)
+
+            if self.deliver_concurrency > 1 and len(groups) > 1:
+                with ThreadPoolExecutor(
+                    max_workers=self.deliver_concurrency,
+                    thread_name_prefix="demux-deliver",
+                ) as pool:
+                    futures = [pool.submit(deliver_one, g) for g in groups]
+                # the with-block joined every future; surface the
+                # FIRST failure (deterministic: registration order)
+                # so a partial failure fails the whole batch and
+                # the shared checkpoint replays it for all groups
+                for fut in futures:
+                    err = fut.exception()
+                    if err is not None:
+                        raise err
+            else:
+                for g in groups:
+                    deliver_one(g)
 
         if self.log_format == "tablelog":
             from aoseventstreamer_spark.sources.tablelog_source import (

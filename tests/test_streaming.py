@@ -292,6 +292,136 @@ def test_demux_rejects_non_canonical_filter(spark, tmp_path, log_dir):
             runner.register("g", bad, lambda cid, df: None)
 
 
+def _last_job_id(spark) -> int:
+    """Id of the newest job in the Spark status store (newest first)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def test_demux_job_count_flat_in_fleet_size(spark, tmp_path, log_dir):
+    """A micro-batch costs the same Spark jobs whatever the number of
+    matching groups: draining one log to 4 and to 40 matching groups
+    runs equally many jobs, and each group's frame is a driver-local
+    LocalRelation whose collect() runs no job."""
+    from aoseventstreamer_spark.streaming.demux import DemuxRunner
+
+    rows = []
+    for i in range(40):
+        rows += _emit_rows(i * 100, f"p{i}", 2)
+    _route_and_write(spark, rows, log_dir)
+
+    def drain(n_groups: int) -> int:
+        runner = DemuxRunner(
+            spark, log_dir, str(tmp_path / f"ck_jobs{n_groups}"),
+            deliver_concurrency=1,
+        )
+        plans, collect_jobs, delivered = [], [], [0]
+
+        def deliver(cid, df):
+            plans.append(df._jdf.queryExecution().optimizedPlan().nodeName())
+            before = _last_job_id(spark)
+            delivered[0] += len(df.collect())
+            collect_jobs.append(_last_job_id(spark) - before)
+
+        for i in range(n_groups):
+            runner.register(f"g{i}", f"UPDATES.STORAGE._.p{i}.>", deliver)
+        before = _last_job_id(spark)
+        q = runner.start(trigger={"availableNow": True})
+        q.awaitTermination(120)
+        jobs = _last_job_id(spark) - before
+        assert delivered[0] == 2 * n_groups
+        assert plans and set(plans) == {"LocalRelation"}
+        assert set(collect_jobs) == {0}
+        return jobs
+
+    assert drain(4) == drain(40)
+
+
+def test_demux_arrow_slices_round_trip_every_column(spark, tmp_path, log_dir):
+    """Each group's Arrow slice carries every ROUTED_EVENTS_SCHEMA
+    column exactly as the log holds it: ``ts`` instants under the UTC
+    session zone (and null ts), and the null collection_id / shared_id
+    / leaf_id of project-level events."""
+    from aoseventstreamer_spark.streaming.demux import DemuxRunner
+    from pyspark.sql import functions as F
+
+    rows = []
+    for i in range(3):
+        rows += _emit_rows(i * 100, f"p{i}", 3)
+        rows.append({
+            "emit_id": i * 100 + 50, "token": "t",
+            "event_resource": schemas.RESOURCE_PROJECT,
+            "resource_id": f"p{i}", "event_type": schemas.EVENT_TYPE_ALL,
+            "relations": [{"project": f"p{i}", "collection": None,
+                           "shared_object": None, "object_groups": []}],
+        })
+    raw = spark.createDataFrame(rows, schemas.RAW_EMITS_SCHEMA).withColumn(
+        "ts",
+        F.when(F.col("emit_id") % 4 == 1, F.lit(None)).otherwise(
+            F.timestamp_micros(F.lit(1_700_000_000_123_457) + F.col("emit_id") * 1_000_003)
+        ),
+    )
+    write_event_log(route_emits(raw, secret="t"), log_dir, partition_by=None)
+
+    # microsecond instants, independent of the Python process's zone
+    cols = [
+        F.unix_micros("ts").alias("ts") if f.name == "ts" else F.col(f.name)
+        for f in schemas.ROUTED_EVENTS_SCHEMA.fields
+    ]
+    specs = {"sub0": "UPDATES.STORAGE._.p0.>", "ex1": "UPDATES.STORAGE._.p1._",
+             "col2": "UPDATES.STORAGE._.p2._.c1._"}
+    got: dict[str, list] = {gid: [] for gid in specs}
+    schemas_seen = []
+    runner = DemuxRunner(spark, log_dir, str(tmp_path / "ck_rt"))
+    for gid, fs in specs.items():
+        def deliver(cid, df, gid=gid):
+            schemas_seen.append(df.schema)
+            got[gid].extend(r.asDict() for r in df.select(*cols).collect())
+        runner.register(gid, fs, deliver)
+    q = runner.start(trigger={"availableNow": True})
+    q.awaitTermination(120)
+
+    log = spark.read.schema(schemas.ROUTED_EVENTS_SCHEMA).parquet(log_dir)
+    for gid, fs in specs.items():
+        expected = [r.asDict() for r in log.filter(subject_filter(fs)).select(*cols).collect()]
+        assert expected, gid
+        assert sorted(got[gid], key=repr) == sorted(expected, key=repr), gid
+    assert set(schemas_seen) == {schemas.ROUTED_EVENTS_SCHEMA}
+    project_level = [r for r in got["ex1"] if r["collection_id"] is None]
+    assert project_level and all(
+        r["shared_id"] is None and r["leaf_id"] is None for r in project_level
+    )
+    ts = [r["ts"] for chunk in got.values() for r in chunk]
+    assert None in ts and any(t is not None and t % 1_000_000 for t in ts)
+
+
+def test_demux_batch_matching_no_group_builds_no_frame(
+    spark, tmp_path, log_dir, monkeypatch
+):
+    """A batch that matches no group hands every group the shared
+    ``runner.empty_frame`` and builds no per-group frame."""
+    from aoseventstreamer_spark.streaming.demux import DemuxRunner
+
+    _route_and_write(spark, _emit_rows(0, "p1", 3), log_dir)
+    runner = DemuxRunner(spark, log_dir, str(tmp_path / "ck_none"))
+    frames = []
+    for i in range(5):
+        runner.register(f"g{i}", f"UPDATES.STORAGE._.absent{i}.>",
+                        lambda cid, df: frames.append(df))
+    built = []
+    real = spark.createDataFrame
+    monkeypatch.setattr(
+        spark, "createDataFrame", lambda *a, **k: built.append(a) or real(*a, **k)
+    )
+    q = runner.start(trigger={"availableNow": True})
+    q.awaitTermination(120)
+    assert len(frames) == 5 and all(df is runner.empty_frame for df in frames)
+    assert len(built) == 1  # start()'s group dimension; no per-group frame
+    assert runner.empty_frame.count() == 0
+
+
 def test_event_type_filters_delivery(spark, tmp_path, log_dir):
     """A group created with a specific event_type must receive only
     matching events (the reference persists but ignores it — lifted)."""

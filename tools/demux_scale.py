@@ -1,12 +1,12 @@
 """Demux fleet-scale probe (VERDICT r5 item 6): drive DemuxRunner with
-hundreds-to-thousands of registered groups through one cached
-micro-batch pass and measure the per-group marginal cost.
+hundreds-to-thousands of registered groups through one micro-batch
+pass and measure the per-group marginal cost.
 
 docs/SCALE.md claims the demux shape is flat in registered groups:
-per batch, ONE candidate-key join serves every group, plus one cheap
-slice job per *matching* group and a shared driver-local empty frame
-for idle ones. This probe measures that claim instead of asserting it
-rhetorically:
+per batch, ONE candidate-key join, collected once to the driver,
+serves every group; each *matching* group gets a driver-local slice
+(a LocalRelation — no Spark job) and idle ones a shared empty frame.
+This probe measures that claim instead of asserting it rhetorically:
 
 - a routed event log over P projects (collection-level events) is
   written once;
@@ -15,22 +15,20 @@ rhetorically:
   that match nothing (idle fleet), one availableNow pass, wall time;
 - the regression assertion: the marginal cost per additional group —
   (t(G_max) - t(G_min)) / (G_max - G_min) — must stay under
-  MARGINAL_BUDGET_S for BOTH fleets. The marginal is dominated by the
-  per-deliver driver action overhead (~65 ms py4j floor per
-  subscriber count()), constant and data-independent; the join itself
-  is one pass regardless of G. Idle groups see the shared
-  Catalyst-folded empty frame (a LocalRelation, not an
-  RDD-with-32-empty-partitions — that construction made every idle
-  count a 32-task job).
+  MARGINAL_BUDGET_S for BOTH fleets. The marginal is the per-deliver
+  driver overhead — py4j round trips to plan the group's frame and
+  the subscriber's collect() — constant and data-independent; the
+  join itself is one pass regardless of G.
 
 Usage: python tools/demux_scale.py [G ...]   (default: 100 500 1000)
 Prints one JSON line per (fleet kind, G) — wall time plus JVM heap
 in use after the pass (the driver holds the group dim, the shared
-empty frame, and G callback closures; the 16-thread delivery pool is
-bounded, so queueing, not memory, is what grows with G) — and exits
-nonzero if the marginal-cost assertion fails. The project count
-scales with the largest requested fleet so every matching group has
-a real slice to receive (r8: probed at 10k groups).
+empty frame and G callback closures; the matched batch sits in the
+Python process as Arrow for one trigger; the delivery pool is bounded,
+so queueing, not memory, is what grows with G) — and exits nonzero
+if the marginal-cost assertion fails. The project count scales with
+the largest requested fleet so every matching group has a real slice
+to receive (r8: probed at 10k groups).
 """
 
 from __future__ import annotations
@@ -50,9 +48,10 @@ from aoseventstreamer_spark.operators.routing import route_emits, write_event_lo
 from aoseventstreamer_spark.session import get_spark
 from aoseventstreamer_spark.streaming.demux import DemuxRunner
 
-# per-group marginal wall budget (local[32], noisy host): measured
-# 8 ms matching / 3 ms idle at 1000 groups after r7's concurrent
-# delivery pool (was 75/28 ms serial); 40 ms = 5x noise headroom
+# per-group marginal wall budget (noisy host): measured 5.9 ms
+# matching / 1.4 ms idle per group over 100 -> 10000 groups at 4 cores
+# with the single-collect fan-out (18.4 / 1.3 ms when each matching
+# group ran its own slice action); 40 ms leaves headroom for noise
 MARGINAL_BUDGET_S = 0.04
 EVENTS_PER_PROJECT = 5
 
@@ -92,7 +91,7 @@ def _run_fleet(spark, log_path: str, work: str, g: int, idle: bool) -> float:
     # (DemuxRunner.deliver_concurrency) — the callback must be
     # thread-safe across groups, hence the lock around the tally
     def deliver(cid, df):
-        n = df.count()
+        n = len(df.collect())
         with lock:
             delivered[0] += n
 
