@@ -4,18 +4,17 @@ snapshot-isolated batch reads and
 ``spark.readStream.format("tablelog").load(path)`` for the
 snapshot-diff stream — with SPARK ITSELF checkpointing the offsets.
 
-Why this exists next to ``tablelog.TableLogStream``: that class is a
-driver loop with its own position file — fine for embedded delivery
-callbacks (the DemuxRunner tier), but it re-implements what Structured
-Streaming already guarantees. This module plugs the manifest log into
-Spark's own micro-batch engine instead:
+This is the only way to tail a tablelog table. The manifest log plugs
+into Spark's own micro-batch engine, so exactly-once comes from a
+replayable source plus the engine's offset log, and the ack is the
+epoch commit:
 
 - offsets are ``{"version": N}`` — the snapshot number, NOT file
   paths, so OPTIMIZE commits (``data_change=false``) advance the
   offset while contributing zero rows: compaction is invisible to a
   live tail under Spark's own exactly-once offset tracking (the
-  file-source redelivery hazard inverted a second time, now inside
-  the engine's checkpoint mechanism — see tests/test_tablelog_source.py
+  file-source redelivery hazard inverted inside the engine's
+  checkpoint mechanism — see tests/test_tablelog_source.py
   kill → optimize → restart);
 - ``partitions(start, end)`` lists the data-change ``add`` actions in
   ``(start, end]`` — one input partition per data file, so read

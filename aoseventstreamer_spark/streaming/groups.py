@@ -235,25 +235,10 @@ class StreamGroupManager:
     ):
         """Start (or resume, via the group's checkpoint) chunked
         delivery. ``deliver(chunk_id, df)`` is the client; raising
-        leaves the chunk unacked → redelivered on restart.
+        leaves the chunk unacked → redelivered on restart. A group
+        with one client is a shared group with one consumer.
         """
-        group = self.get_stream_group(group_id)
-        if trigger is None:
-            trigger = {"processingTime": "250 milliseconds"}
-
-        def _handle(batch_df: DataFrame, batch_id: int) -> None:
-            deliver(batch_id, batch_df)
-
-        return (
-            self._filtered_stream(group)
-            .writeStream.foreachBatch(_handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(self.checkpoints_root, group.id),
-            )
-            .trigger(**trigger)
-            .start()
-        )
+        return self.read_stream_group_shared(group_id, [deliver], trigger)
 
     def read_stream_group_shared(
         self,

@@ -37,13 +37,16 @@ of that idea:
   deleted by commits, so a reader pinned to version N is isolated from
   concurrent appends AND from OPTIMIZE — no reader-visible swap window
   (the documented gap in operators/compaction.py's rename protocol).
-- STREAM = ``TableLogStream`` checkpoints a SNAPSHOT VERSION (not file
-  paths) and delivers only ``add`` actions with ``data_change=True``
-  from versions it has not processed. Compaction commits its rewrite
-  as ``remove(old)+add(new)`` with ``data_change=False``, so a live
-  tail skips it entirely — the exactly-once inversion of the round-7
-  hazard (tests/test_tablelog.py asserts zero re-delivery across a
-  kill → optimize → restart).
+- STREAM = ``spark.readStream.format("tablelog")``
+  (sources/tablelog_source.py): Spark's own checkpoint carries a
+  SNAPSHOT VERSION (not file paths) and each micro-batch delivers only
+  ``add`` actions with ``data_change=True``. Compaction commits its
+  rewrite as ``remove(old)+add(new)`` with ``data_change=False``, so a
+  live tail skips it entirely — the exactly-once inversion of the
+  round-7 hazard (tests/test_tablelog.py asserts zero re-delivery
+  across a kill → optimize → restart). ``option("readChangeFeed",
+  "true")`` streams ``read_changes`` row deltas instead, which the
+  ``apply_*_delta`` view folds below consume.
 - OPTIMIZE = the small-file rewrite as ONE atomic commit; VACUUM
   deletes data files no retained snapshot references (age-guarded).
 - DML = DELETE / UPDATE / MERGE / replaceWhere as copy-on-write
@@ -102,7 +105,6 @@ they staged are reused verbatim).
 
 from __future__ import annotations
 
-import json
 import math
 import time
 import uuid
@@ -112,7 +114,6 @@ from pyspark.sql import types as T
 
 from aoseventstreamer_spark.logstore import (
     _LOCK_STALE_SECONDS,
-    _MANIFEST_DIGITS,
     LOG_DIR,
     CommitConflict,
     HadoopLogStore,
@@ -3560,172 +3561,6 @@ class TableLog:
                 self._fs.delete(st.getPath(), True)
                 deleted.append(n)
         return deleted
-
-
-class TableLogStream:
-    """Snapshot-diff streaming source: checkpoints a VERSION, delivers
-    only ``data_change`` adds. This is what makes compaction invisible
-    to a live tail — the exactly-once inversion of the file-source
-    path-checkpoint hazard (operators/compaction.py docstring).
-
-    Delivery contract: ``deliver(version_from, version_to, df)`` is
-    called once per non-empty batch; the position commits AFTER it
-    returns, so a crash inside ``deliver`` replays that batch
-    (at-least-once across a mid-batch crash, exactly-once across
-    graceful restarts AND across any amount of compaction)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table_path: str,
-        checkpoint: str,
-        ignore_changes: bool = False,
-    ):
-        self.spark = spark
-        self.log = TableLog(spark, table_path)
-        self.checkpoint = checkpoint.rstrip("/")
-        self.ignore_changes = ignore_changes
-        self._fs, self._ck_root, self._jvm = _fs(spark, self.checkpoint)
-        self._Path = self._jvm.org.apache.hadoop.fs.Path
-
-    def _position(self) -> int:
-        """Committed position = the MAX over numbered position files
-        (plus the legacy single ``position.json`` if one exists from an
-        older checkpoint). Numbered files are each committed by a
-        tmp-write + rename to a FRESH name, so no step ever deletes the
-        previous position before the new one is durable — the old
-        delete-then-rename protocol lost the position entirely if the
-        process died between the two calls, and ``_position()``'s
-        0-fallback then re-delivered the whole table (round-8
-        self-review finding; crash-window test in
-        tests/test_advice_r8b.py)."""
-        best = 0
-        if self._fs.exists(self._ck_root):
-            for st in self._fs.listStatus(self._ck_root):
-                name = st.getPath().getName()
-                if name.startswith("position-") and name.endswith(".json"):
-                    stem = name[len("position-"):-len(".json")]
-                    if stem.isdigit():
-                        best = max(best, int(stem))
-        legacy = self._Path(f"{self.checkpoint}/position.json")
-        if self._fs.exists(legacy):
-            stream = self._fs.open(legacy)
-            try:
-                ioutils = self._jvm.org.apache.commons.io.IOUtils
-                data = bytes(ioutils.toByteArray(stream))
-            finally:
-                stream.close()
-            best = max(best, int(json.loads(data.decode("utf-8"))["last_version"]))
-        return best
-
-    def _commit_position(self, version: int) -> None:
-        """Commit = rename a tmp file to ``position-<version>.json``
-        (a name that never pre-exists, so the rename is atomic and
-        needs no prior delete on any FS). Older position files are
-        pruned only AFTER the new one is durable; a crash at any point
-        leaves at least one committed position on disk."""
-        tmp = self._Path(f"{self.checkpoint}/.position-{uuid.uuid4().hex}.json")
-        self._fs.mkdirs(self._ck_root)
-        out = self._fs.create(tmp, True)
-        try:
-            out.write(
-                bytearray(
-                    json.dumps({"last_version": version}).encode("utf-8")
-                )
-            )
-        finally:
-            out.close()
-        dst = self._Path(
-            f"{self.checkpoint}/position-{version:0{_MANIFEST_DIGITS}d}.json"
-        )
-        if not self._fs.rename(tmp, dst) and not self._fs.exists(dst):
-            raise IOError("failed to commit stream position")
-        # prune superseded positions + legacy file (best-effort tidy)
-        for st in self._fs.listStatus(self._ck_root):
-            name = st.getPath().getName()
-            if name == "position.json":
-                self._fs.delete(st.getPath(), False)
-            elif name.startswith("position-") and name.endswith(".json"):
-                stem = name[len("position-"):-len(".json")]
-                if stem.isdigit() and int(stem) < version:
-                    self._fs.delete(st.getPath(), False)
-
-    def pending_files(self) -> tuple[int, int, list[dict]]:
-        """(from_version, to_version, add ENTRIES (path + optional
-        deletion vector) of data-change adds in (from, to])."""
-        frm = self._position()
-        to = self.log.latest_version()
-        entries: list[dict] = []
-        for v in range(frm + 1, to + 1):
-            m = self.log._read_manifest(v)
-            for a in m["actions"]:
-                if a["op"] == "add" and a.get("data_change", True):
-                    entries.append(
-                        {
-                            "path": a["path"],
-                            **({"dv": a["dv"]} if a.get("dv") else {}),
-                        }
-                    )
-                elif (
-                    a["op"] == "remove"
-                    and a.get("data_change", True)
-                    and not self.ignore_changes
-                ):
-                    raise ValueError(
-                        f"version {v} contains a data-change remove "
-                        "(DELETE/MERGE rewrote consumed files); this "
-                        "append-only tail cannot stay exactly-once — "
-                        "pass ignore_changes=True to deliver the "
-                        "rewritten files anyway (surviving rows will "
-                        "re-deliver, Delta's ignoreChanges contract)"
-                    )
-        return frm, to, entries
-
-    def run_once(self, deliver) -> bool:
-        """Process all pending snapshots as one micro-batch. Returns
-        True if anything was delivered (or the position advanced)."""
-        frm, to, entries = self.pending_files()
-        if to <= frm:
-            return False
-        if entries:
-            df = self.log._scan_entries(entries, self.log.schema(to))
-            deliver(frm, to, df)
-        self._commit_position(to)
-        return True
-
-
-class TableLogChangeStream(TableLogStream):
-    """Change-data-feed tail (Delta's streaming ``readChangeFeed``):
-    where the append-only ``TableLogStream`` REFUSES data-change
-    removes, this source CONSUMES them — each micro-batch is
-    ``read_changes(position, latest)``, i.e. row-level inserts and
-    deletes with commit stamps, so a downstream consumer can maintain
-    state through DELETE/UPDATE/MERGE instead of going blind the first
-    time DML touches a consumed region. Layout-only commits still
-    deliver nothing. Same position/checkpoint machinery and the same
-    delivery contract as the parent (position commits AFTER deliver
-    returns).
-
-    The canonical consumer is incremental view maintenance:
-    ``apply_count_delta`` folds a batch of changes into a keyed
-    count/sum state frame — the streaming-materialized-view shape that
-    makes CDF worth storing at all."""
-
-    def run_once(self, deliver) -> bool:
-        frm = self._position()
-        to = self.log.latest_version()
-        if to <= frm:
-            return False
-        any_change = False
-        for v in range(frm + 1, to + 1):
-            m = self.log._read_manifest(v)
-            if any(a.get("data_change", True) for a in m["actions"]):
-                any_change = True
-                break
-        if any_change:
-            deliver(frm, to, self.log.read_changes(frm, to))
-        self._commit_position(to)
-        return True
 
 
 def apply_count_delta(

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -53,3 +54,61 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def oracle_sf_dir():
     return SF_DIR_ORACLE
+
+
+class TablelogTail:
+    """Tail a tablelog table the one way the package offers:
+    ``spark.readStream.format("tablelog")`` + ``foreachBatch``, with
+    Spark's checkpoint ``ck`` carrying the ``{"version": N}`` offset.
+    ``options`` are read options (``readChangeFeed="true"``,
+    ``ignoreChanges="true"``); ``sink(batch_df, batch_id)`` sees each
+    micro-batch."""
+
+    def __init__(self, spark):
+        from aoseventstreamer_spark.sources.tablelog_source import (
+            register_tablelog_source,
+        )
+
+        register_tablelog_source(spark)
+        self.spark = spark
+        self.live = []
+
+    def _writer(self, path, ck, sink, options):
+        reader = self.spark.readStream.format("tablelog")
+        for k, v in options.items():
+            reader = reader.option(k, v)
+        return (
+            reader.load(path)
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ck)
+        )
+
+    def once(self, path, ck, sink, **options):
+        """One ``availableNow`` run (a kill/restart step); a failing
+        batch re-raises here."""
+        q = self._writer(path, ck, sink, options).trigger(availableNow=True).start()
+        assert q.awaitTermination(120), "tablelog tail did not drain"
+        return q
+
+    def running(self, path, ck, sink, **options):
+        """A live tail; drive it with ``processAllAvailable()``. It is
+        stopped at teardown."""
+        q = self._writer(path, ck, sink, options).trigger(
+            processingTime="100 milliseconds"
+        ).start()
+        self.live.append(q)
+        return q
+
+    @staticmethod
+    def end_version(q) -> int:
+        """The table version the query's last micro-batch read up to
+        (its source ``endOffset``)."""
+        return json.loads(q.lastProgress.json)["sources"][0]["endOffset"]["version"]
+
+
+@pytest.fixture()
+def tablelog_tail(spark):
+    tail = TablelogTail(spark)
+    yield tail
+    for q in tail.live:
+        q.stop()

@@ -5,6 +5,8 @@ fails is redelivered after restart (at-least-once)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from aoseventstreamer_spark import schemas
@@ -69,29 +71,53 @@ def test_replay_from_start_and_filter(spark, tmp_path, log_dir):
     assert sum(delivered.values()) == 6
 
 
-def test_at_least_once_redelivery(spark, tmp_path, log_dir):
-    _route_and_write(spark, _emit_rows(0, "p1", 5), log_dir)
-    mgr = StreamGroupManager(spark, log_dir, str(tmp_path / "state"))
+@pytest.mark.parametrize("log_format", ["parquet", "tablelog"])
+def test_at_least_once_redelivery(spark, tmp_path, log_dir, log_format):
+    """An acked chunk, then a chunk whose deliver raises: the failed
+    epoch's offset stays uncommitted, and a restart redelivers exactly
+    the unacked chunk — for the file source and for the native
+    tablelog source alike."""
+    from aoseventstreamer_spark.tablelog import TableLog
+
+    def emit(rows):
+        if log_format == "tablelog":
+            TableLog(spark, log_dir).append(_routed(spark, rows))
+        else:
+            _route_and_write(spark, rows, log_dir)
+
+    def keys(df):
+        return [(r.subject, r.seq) for r in df.select("subject", "seq").collect()]
+
+    emit(_emit_rows(0, "p1", 3))
+    mgr = StreamGroupManager(
+        spark, log_dir, str(tmp_path / "state"), log_format=log_format
+    )
     group = mgr.create_stream_group(
         schemas.RESOURCE_PROJECT, "p1", include_subresources=True
     )
+    acked: list = []
+    q = mgr.read_available(group.id, lambda cid, df: acked.extend(keys(df)))
+    assert q.awaitTermination(120) and len(acked) == 3
 
-    seen: list[int] = []
+    emit(_emit_rows(100, "p1", 5))
+    seen: list = []
 
     def failing_deliver(chunk_id: int, df) -> None:
-        seen.append(df.count())
+        seen.extend(keys(df))
         raise RuntimeError("client crashed before ack")
 
     q = mgr.read_available(group.id, failing_deliver)
     with pytest.raises(Exception):
         q.awaitTermination(120)
-    assert sum(seen) > 0  # the chunk WAS handed over, but never acked
+    assert len(seen) == 5  # the chunk WAS handed over, but never acked
+    commits = os.path.join(mgr.checkpoints_root, group.id, "commits")
+    assert sorted(n for n in os.listdir(commits) if n.isdigit()) == ["0"]
 
-    ok: list[int] = []
-    q2 = mgr.read_available(group.id, lambda cid, df: ok.append(df.count()))
-    q2.awaitTermination(120)
-    # unacked chunk redelivered in full after restart
-    assert sum(ok) == 5
+    ok: list = []
+    q = mgr.read_available(group.id, lambda cid, df: ok.extend(keys(df)))
+    assert q.awaitTermination(120)
+    # exactly the unacked chunk is redelivered after restart
+    assert sorted(ok) == sorted(seen) and not set(ok) & set(acked)
 
 
 def test_group_registry_roundtrip(spark, tmp_path, log_dir):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from aoseventstreamer_spark.tablelog import TableLog, TableLogStream
+from aoseventstreamer_spark.tablelog import TableLog
 
 
 def _rows(df):
@@ -167,53 +167,19 @@ def test_merge_partitioned_preserves_layout(spark, tmp_path):
 # ---------- stream contract under DML ----------
 
 
-def test_stream_refuses_data_change_remove(spark, tmp_path):
+def test_stream_refuses_data_change_remove(spark, tmp_path, tablelog_tail):
     log = _ranged(spark, str(tmp_path / "sr"), n_appends=2)
-    stream = TableLogStream(spark, log.path, str(tmp_path / "ck_sr"))
-    got = []
-    stream.run_once(lambda a, b, df: got.extend(r.id for r in df.collect()))
-    assert len(got) == 100
-    log.delete_where([("id", "<", 10)])
-    with pytest.raises(ValueError, match="data-change remove"):
-        stream.run_once(lambda a, b, df: None)
-    # ignore_changes: rewritten file re-delivers its survivors
-    relaxed = TableLogStream(
-        spark, log.path, str(tmp_path / "ck_sr"), ignore_changes=True
-    )
-    extra = []
-    relaxed.run_once(lambda a, b, df: extra.extend(r.id for r in df.collect()))
-    assert sorted(extra) == list(range(10, 50))  # survivors of the rewritten file
-
-
-def test_native_source_refuses_data_change_remove(spark, tmp_path):
-    from aoseventstreamer_spark.sources.tablelog_source import (
-        register_tablelog_source,
-    )
-
-    register_tablelog_source(spark)
-    log = _ranged(spark, str(tmp_path / "ns"), n_appends=2)
-    ck = str(tmp_path / "ck_ns")
+    ck = str(tmp_path / "ck_sr")
     got = []
 
-    def run(opts=None):
-        r = spark.readStream.format("tablelog")
-        for k, v in (opts or {}).items():
-            r = r.option(k, v)
-        q = (
-            r.load(log.path)
-            .writeStream.foreachBatch(
-                lambda df, bid: got.extend(r_.id for r_ in df.collect())
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    def ids(df, _):
+        got.extend(r.id for r in df.collect())
 
-    run()
+    tablelog_tail.once(log.path, ck, ids)
     assert len(got) == 100
     log.delete_where([("id", "<", 10)])
-    with pytest.raises(Exception):
-        run()
-    run({"ignoreChanges": "true"})
-    assert sorted(got) == sorted(list(range(100)) + list(range(10, 50)))
+    with pytest.raises(Exception, match="data-change remove"):
+        tablelog_tail.once(log.path, ck, ids)
+    # ignoreChanges: rewritten file re-delivers its survivors
+    tablelog_tail.once(log.path, ck, ids, ignoreChanges="true")
+    assert sorted(got[100:]) == list(range(10, 50))  # survivors of the rewritten file

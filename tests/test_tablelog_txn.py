@@ -324,87 +324,100 @@ def test_cdf_range_spans_multiple_commits(spark, tmp_path):
 
 # ---------- CDF streaming tail + incremental view maintenance ----------
 
-from aoseventstreamer_spark.tablelog import (  # noqa: E402
-    TableLogChangeStream,
-    apply_count_delta,
-)
+from aoseventstreamer_spark.tablelog import apply_count_delta  # noqa: E402
 
 
-def _collect_changes(stream):
-    out = {}
-
-    def deliver(frm, to, df):
-        out["df"] = df
-        out["range"] = (frm, to)
-
-    delivered = stream.run_once(deliver)
-    return delivered, out
+def _change_rows(got):
+    return lambda df, _: got.extend(df.collect())
 
 
-def test_change_stream_consumes_dml(spark, tmp_path):
+def _changes_since_last(log):
+    """Each call returns ``log.read_changes(last, head)`` — exactly the
+    frame a ``readChangeFeed`` micro-batch over that range carries —
+    and moves ``last`` to the head."""
+    last = 0
+
+    def changes():
+        nonlocal last
+        frm, last = last, log.latest_version()
+        return log.read_changes(frm, last)
+
+    return changes
+
+
+def test_change_stream_consumes_dml(spark, tmp_path, tablelog_tail):
     """The CDF tail delivers row-level deltas across DELETE/UPDATE —
     the commits the append-only tail refuses."""
     log = _ranged(spark, str(tmp_path / "cs"))
-    stream = TableLogChangeStream(
-        spark, log.path, str(tmp_path / "cs_ckpt")
+    got = []
+    q = tablelog_tail.running(
+        log.path, str(tmp_path / "cs_ckpt"), _change_rows(got),
+        readChangeFeed="true",
     )
-    delivered, out = _collect_changes(stream)
-    assert delivered
-    ins = out["df"].filter(F.col("_change_type") == "insert")
-    assert ins.count() == 200  # the initial appends are pure inserts
+    q.processAllAvailable()
+    # the initial appends are pure inserts
+    assert len(got) == 200 and {r._change_type for r in got} == {"insert"}
 
+    got.clear()
     log.delete_where([("id", ">=", 60), ("id", "<", 80)])
     log.update_where([("id", "=", 5)], {"v": "v + 100"})
-    delivered, out = _collect_changes(stream)
-    assert delivered
-    ch = out["df"]
+    q.processAllAvailable()
+    assert tablelog_tail.end_version(q) == log.latest_version()
     assert sorted(
-        r.id for r in ch.filter(F.col("_change_type") == "delete").collect()
+        r.id for r in got if r._change_type == "delete"
     ) == [5] + list(range(60, 80))
-    ups = ch.filter(F.col("_change_type") == "insert").collect()
+    ups = [r for r in got if r._change_type == "insert"]
     assert len(ups) == 1 and ups[0].id == 5 and ups[0].v == 100
 
-    # nothing pending → no delivery, position stable
-    delivered, _ = _collect_changes(stream)
-    assert not delivered
+    # nothing pending → no delivery
+    got.clear()
+    q.processAllAvailable()
+    assert got == []
 
 
-def test_change_stream_skips_layout_only_commits(spark, tmp_path):
+def test_change_stream_skips_layout_only_commits(spark, tmp_path, tablelog_tail):
     log = TableLog(spark, str(tmp_path / "cl"))
     for i in range(6):
         log.append(spark.range(i * 5, i * 5 + 5).coalesce(1))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "cl_ckpt"))
-    _collect_changes(stream)  # drain the appends
+    got = []
+    q = tablelog_tail.running(
+        log.path, str(tmp_path / "cl_ckpt"), _change_rows(got),
+        readChangeFeed="true",
+    )
+    q.processAllAvailable()  # drain the appends
+    assert len(got) == 30
     res = log.optimize(min_files=2, small_file_bytes=10**9)
     assert res["files_removed"] > 0
-    delivered, out = _collect_changes(stream)
-    assert delivered and "df" not in out  # position advanced, no rows
+    got.clear()
+    q.processAllAvailable()
+    # position advanced, no rows
+    assert tablelog_tail.end_version(q) == log.latest_version() and got == []
 
 
-def test_incremental_view_tracks_batch_groupby(spark, tmp_path):
+def test_incremental_view_tracks_batch_groupby(spark, tmp_path, tablelog_tail):
     """apply_count_delta folded over the CDF tail equals a fresh
     groupBy-count of the table after every kind of commit."""
     log = TableLog(spark, str(tmp_path / "iv"))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "iv_ckpt"))
     state = None
 
-    def fold():
+    def deliver(df, _):
         nonlocal state
+        state = apply_count_delta(state, df, ["v"])
+        state = spark.createDataFrame(
+            state.collect(), state.schema
+        )  # pin (a real consumer checkpoints state between batches)
 
-        def deliver(frm, to, df):
-            nonlocal state
-            state = apply_count_delta(state, df, ["v"])
-            state = spark.createDataFrame(
-                state.collect(), state.schema
-            )  # pin (a real consumer checkpoints state between batches)
-
-        stream.run_once(deliver)
+    def fold():
+        q.processAllAvailable()
         want = _rows(log.read().groupBy("v").count().withColumnRenamed("count", "n"))
         got = _rows(state) if state is not None else []
         assert got == want, f"state diverged: {got} != {want}"
 
     log.append(
         spark.range(100).select("id", (F.col("id") % 5).alias("v")).coalesce(1)
+    )
+    q = tablelog_tail.running(
+        log.path, str(tmp_path / "iv_ckpt"), deliver, readChangeFeed="true"
     )
     fold()
     log.append(
@@ -470,18 +483,13 @@ def test_incremental_sum_view_tracks_batch_groupby(spark, tmp_path):
     from aoseventstreamer_spark.tablelog import apply_agg_delta
 
     log = TableLog(spark, str(tmp_path / "sv"))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "sv_ckpt"))
+    changes = _changes_since_last(log)
     state = None
 
     def fold():
         nonlocal state
-
-        def deliver(frm, to, df):
-            nonlocal state
-            state = apply_agg_delta(state, df, ["v"], {"amt": "amt_sum"})
-            state = spark.createDataFrame(state.collect(), state.schema)
-
-        stream.run_once(deliver)
+        state = apply_agg_delta(state, changes(), ["v"], {"amt": "amt_sum"})
+        state = spark.createDataFrame(state.collect(), state.schema)
         want = _rows(
             log.read()
             .groupBy("v")
@@ -517,7 +525,7 @@ def test_incremental_minmax_view_tracks_batch_groupby(spark, tmp_path):
     from aoseventstreamer_spark.tablelog import apply_minmax_delta
 
     log = TableLog(spark, str(tmp_path / "mm"))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "mm_ckpt"))
+    changes = _changes_since_last(log)
     state = None
     rescans = []
 
@@ -537,13 +545,8 @@ def test_incremental_minmax_view_tracks_batch_groupby(spark, tmp_path):
 
     def fold():
         nonlocal state
-
-        def deliver(frm, to, df):
-            nonlocal state
-            state = apply_minmax_delta(state, df, ["v"], ["amt"], rescan)
-            state = spark.createDataFrame(state.collect(), state.schema)
-
-        stream.run_once(deliver)
+        state = apply_minmax_delta(state, changes(), ["v"], ["amt"], rescan)
+        state = spark.createDataFrame(state.collect(), state.schema)
         want = _rows(
             log.read()
             .groupBy("v")
@@ -596,7 +599,7 @@ def test_incremental_hll_view_matches_fresh_sketch(spark, tmp_path):
 
     P = 5
     log = TableLog(spark, str(tmp_path / "hv"))
-    stream = TableLogChangeStream(spark, log.path, str(tmp_path / "hv_ckpt"))
+    changes = _changes_since_last(log)
     state = None
 
     def rescan(keys_df):
@@ -610,13 +613,8 @@ def test_incremental_hll_view_matches_fresh_sketch(spark, tmp_path):
 
     def fold():
         nonlocal state
-
-        def deliver(frm, to, df):
-            nonlocal state
-            state = apply_hll_delta(state, df, ["v"], "uid", rescan, p=P)
-            state = spark.createDataFrame(state.collect(), state.schema)
-
-        stream.run_once(deliver)
+        state = apply_hll_delta(state, changes(), ["v"], "uid", rescan, p=P)
+        state = spark.createDataFrame(state.collect(), state.schema)
         want = _rows(hll_sketch(log.read(), "uid", P, group_cols=["v"]))
         got = _rows(state) if state is not None else []
         assert got == want, f"registers diverged: {got} != {want}"
